@@ -267,6 +267,46 @@ def test_six_stat_matches_numpy(spark):
         assert np.isclose(out.loc[g, "x_max"], x.max())
 
 
+def test_six_stat_hierarchy_backtick_feature_name(spark):
+    """A backtick in a feature name is escaped in the SQL the rollup
+    builds: input reference and output alias both keep the name."""
+    from combinedfeatureextraction_spark.operators.aggregates import (
+        six_stat_hierarchy,
+    )
+
+    feat = "a`b"
+    rng = np.random.default_rng(4)
+    pdf = pd.DataFrame(
+        {
+            "slide": rng.choice(["s1", "s2"], 200),
+            "cls": rng.choice(["x", "y", "z"], 200),
+            feat: rng.normal(3, 2, 200),
+        }
+    )
+    out = six_stat_hierarchy(
+        spark.createDataFrame(pdf), [feat], "slide", "cls"
+    ).toPandas()
+    assert [c for c in out.columns if c.startswith(feat)] == [
+        f"{feat}_{s}" for s in ("sum", "mean", "std", "median", "min", "max")
+    ]
+    groups = list(pdf.groupby(["slide", "cls"])) + [
+        ((sl, None), sub) for sl, sub in pdf.groupby("slide")
+    ]
+    assert len(out) == len(groups)
+    for (sl, c), sub in groups:
+        row = out[(out["slide"] == sl) & (
+            out["cls"].isna() if c is None else out["cls"] == c
+        )]
+        assert len(row) == 1 and row["grouping_level"].iloc[0] == (c is None)
+        x = sub[feat].values
+        want = {
+            "sum": x.sum(), "mean": x.mean(), "std": x.std(ddof=0),
+            "median": np.median(x), "min": x.min(), "max": x.max(),
+        }
+        for stat, v in want.items():
+            assert np.isclose(row[f"{feat}_{stat}"].iloc[0], v), (sl, c, stat)
+
+
 def test_otsu_matches_numpy_reference(spark):
     from combinedfeatureextraction_spark.operators.threshold import otsu_threshold
 

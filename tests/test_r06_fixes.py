@@ -226,12 +226,13 @@ def test_minhash_expr_string_signatures_bit_identical(spark):
         ).collect()
     )
     # reference pairs recomputed from the reference band rows
+    band_rows = ref_bands.collect()
     ref_pairs2 = sorted(
         (a, b)
         for (a, band), (b, band2) in [
             ((x["_id"], (x["band"], x["bh"])), (y["_id"], (y["band"], y["bh"])))
-            for x in ref_bands.collect()
-            for y in ref_bands.collect()
+            for x in band_rows
+            for y in band_rows
         ]
         if a < b and band == band2
     )

@@ -188,29 +188,34 @@ def test_polygon_component_features_bowtie(spark):
 
 
 def test_edt_matches_bruteforce():
-    """Exact-EDT parity: the separable Felzenszwalb transform must equal
-    the O(N·M) brute-force nearest-background distance (outside-the-array
-    ring counts as background) on random masks."""
+    """Exact-EDT parity: the separable transform must equal the O(N·M)
+    brute-force nearest-background distance on random masks: narrow
+    ones, ones 65-200 px wide (several row blocks per mask) at densities
+    from speckle to near-solid, and one 300 px wide mask whose rows split
+    into several column blocks."""
     from combinedfeatureextraction_spark.multimodal.rasterize import (
         distance_transform_numpy,
     )
 
     rng = np.random.default_rng(5)
-    for _ in range(6):
-        h, w = rng.integers(3, 16, 2)
-        mask = rng.random((h, w)) < 0.65
+    cases = [(*rng.integers(3, 16, 2), 0.65) for _ in range(6)]
+    for density in (0.6, 0.9, 0.98, 0.995):
+        cases.append((rng.integers(20, 90), rng.integers(65, 201), density))
+    cases.append((7, 300, 0.99))
+    for h, w, density in cases:
+        mask = rng.random((h, w)) < density
         got = distance_transform_numpy(mask)
-        # brute force on the padded mask (virtual background ring)
+        # brute force on the padded mask (virtual background ring), one
+        # row of pixels against every background pixel at a time
         pad = np.zeros((h + 2, w + 2), dtype=bool)
         pad[1:-1, 1:-1] = mask
         bg = np.argwhere(~pad)
+        cc = np.arange(1, w + 1)
         want = np.zeros((h, w))
         for r in range(h):
-            for c in range(w):
-                if mask[r, c]:
-                    d2 = (bg[:, 0] - (r + 1)) ** 2 + (bg[:, 1] - (c + 1)) ** 2
-                    want[r, c] = np.sqrt(d2.min())
-        assert np.allclose(got, want), (h, w)
+            d2 = (bg[None, :, 0] - (r + 1)) ** 2 + (bg[None, :, 1] - cc[:, None]) ** 2
+            want[r] = np.where(mask[r], np.sqrt(d2.min(axis=1)), 0.0)
+        assert np.array_equal(got, want), (h, w)
 
 
 def test_watershed_invariants_random_masks():
@@ -580,10 +585,13 @@ def _brute_ring(mask, r):
 
 
 def test_ring_stats_matches_bruteforce_morphology():
-    """ring_stats_numpy's EDT-threshold dilate/erode must equal explicit
+    """ring_stats_numpy's separable dilate/erode must equal explicit
     disk-offset morphology (area + perimeter + component count) on
-    random blobs and rectangles."""
+    random blobs and rectangles at r = 2, 3, and at the operator's
+    default disk(20) on a rectangle, sparse blobs, a rasterized star
+    polygon and one mask wider than 64 px."""
     from combinedfeatureextraction_spark.multimodal.rasterize import (
+        rasterize_polygon_numpy,
         ring_stats_numpy,
     )
 
@@ -591,20 +599,29 @@ def test_ring_stats_matches_bruteforce_morphology():
     cases = [np.ones((5, 7), bool), np.ones((1, 9), bool)]
     for _ in range(5):
         cases.append(rng.random((12, 14)) < 0.25)
-    for r in (2, 3):
-        for mask in cases:
-            if not mask.any():
-                continue
-            ring = _brute_ring(mask, r)
-            area, per, n, avg = ring_stats_numpy(mask, r)
-            assert area == int(ring.sum()), (r, mask.sum())
-            # 4-edge perimeter of the whole ring, brute counted
-            lab = np.pad(ring, 1)
-            edges = 0
-            for ax, sh in ((0, 1), (0, -1), (1, 1), (1, -1)):
-                edges += int((lab & ~np.roll(lab, sh, axis=ax)).sum())
-            assert per == edges, r
-            assert avg is None or avg > 0
+    runs = [(r, mask) for r in (2, 3) for mask in cases]
+    ang = np.sort(rng.uniform(0, 2 * np.pi, 17))
+    rad = 14 * rng.uniform(0.6, 1.1, 17)
+    star, _, _ = rasterize_polygon_numpy(
+        np.stack([rad * np.cos(ang), rad * np.sin(ang)], axis=1)
+    )
+    wide = rng.random((30, 90)) < 0.05
+    wide[10:20, 5:85] = True
+    for mask in (np.ones((6, 9), bool), rng.random((12, 14)) < 0.1, star, wide):
+        runs.append((20, mask))
+    for r, mask in runs:
+        if not mask.any():
+            continue
+        ring = _brute_ring(mask, r)
+        area, per, n, avg = ring_stats_numpy(mask, r)
+        assert area == int(ring.sum()), (r, mask.shape, mask.sum())
+        # 4-edge perimeter of the whole ring, brute counted
+        lab = np.pad(ring, 1)
+        edges = 0
+        for ax, sh in ((0, 1), (0, -1), (1, 1), (1, -1)):
+            edges += int((lab & ~np.roll(lab, sh, axis=ax)).sum())
+        assert per == edges, (r, mask.shape)
+        assert avg is None or avg > 0
 
 
 def test_ring_weighted_thickness_two_components():
