@@ -11,29 +11,23 @@ in this container, so the transforms are self-contained numpy with the
 CIE constants spelled out; HSV is pinned against the stdlib colorsys
 dual, LAB against published sRGB reference values (tests/test_color.py).
 
-All pixel work is payload-local inside Arrow-batched mapInPandas — the
-image and its compartment mask arrive as binary columns, masks/arrays
-never become Spark types, and only scalar stats come back (the SURVEY
-§1.1 payload contract). Pure map: no shuffle, parallelism = input
-partitions — the 100 TB shape of every other multimodal operator.
+All pixel work is payload-local inside the shared Arrow-batched
+``_rowmap.map_rows`` — the image and its compartment mask arrive as
+binary columns, masks/arrays never become Spark types, and only scalar
+stats come back (the SURVEY §1.1 payload contract). Pure map: no shuffle,
+parallelism = input partitions — the 100 TB shape of every other
+multimodal operator.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from combinedfeatureextraction_spark.multimodal.binary import (
-    _PNG_SIG,
-    decode_bmp,
-    decode_png,
-    decode_ppm,
-)
+from combinedfeatureextraction_spark.multimodal._rowmap import map_rows
+from combinedfeatureextraction_spark.multimodal.binary import decode_payload
 
 
 def rgb_to_hsv_numpy(rgb: np.ndarray) -> np.ndarray:
@@ -107,19 +101,13 @@ def rgb_to_lab_numpy(rgb: np.ndarray) -> np.ndarray:
 
 
 def _decode_image_shaped(payload: bytes) -> np.ndarray:
-    """Decode an image payload to an (H, W, C) float array (magic-byte
-    dispatch over the in-repo codecs; the compressed-codec seam raises
-    exactly like binary._decode_real)."""
-    if payload[:2] in (b"P6", b"P5"):
-        arr, w, h, ch = decode_ppm(payload)
-    elif payload[:2] == b"BM":
-        arr, w, h, ch = decode_bmp(payload)
-    elif payload[:8] == _PNG_SIG:
-        arr, w, h, ch = decode_png(payload)
-    else:
+    """Decode an image payload (netpbm/BMP/PNG/JPEG) to an (H, W, C) float
+    array. Audio and empty payloads raise here, unknown magic in
+    binary.decode_payload."""
+    arr, w, h, ch = decode_payload(payload)
+    if w is None:
         raise NotImplementedError(
-            "masked_color_stats: image payload must be netpbm/BMP/PNG "
-            "(JPEG via multimodal.jpeg.decode_jpeg upstream if needed)"
+            "image payload must be netpbm/BMP/PNG/JPEG, not audio or empty"
         )
     return np.asarray(arr, dtype=np.float64).reshape(h, w, ch)
 
@@ -155,54 +143,35 @@ def masked_color_stats(
     ``hsv``/``lab`` = the spaces its thresholds run in,
     FeatureExtractor.py:325 / process_mc_features.py:68).
 
-    ``payload_col``: RGB image bytes (netpbm/BMP/PNG); ``mask_col``: a
+    ``payload_col``: RGB image bytes (netpbm/BMP/PNG/JPEG); ``mask_col``: a
     single-channel image of identical dimensions, >0 selects pixels.
     RGB channels are scaled to [0,1] before the transform (so ``rgb``
     stats are in [0,1] too); population std (ddof=0, numpy default =
     the reference's np.nanstd)."""
     if space not in _SPACES:
         raise ValueError(f"space must be one of {_SPACES}")
-    cols = [id_col, payload_col, mask_col]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for mid, payload, mask_payload in zip(
-                b[id_col], b[payload_col], b[mask_col]
-            ):
-                img = _decode_image_shaped(bytes(payload))
-                if img.shape[-1] != 3:
-                    raise ValueError("payload must decode to 3 channels")
-                m = _decode_image_shaped(bytes(mask_payload))
-                if m.shape[-1] != 1:
-                    raise ValueError("mask must decode to 1 channel")
-                sel = m[..., 0] > 0
-                px = img[sel] / 255.0
-                n = int(sel.sum())
-                if n == 0:
-                    rows.append((mid, 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-                    continue
-                if space == "hsv":
-                    px = rgb_to_hsv_numpy(px)
-                elif space == "lab":
-                    px = rgb_to_lab_numpy(px)
-                mean = np.nanmean(px, axis=0)
-                std = np.nanstd(px, axis=0)
-                rows.append(
-                    (mid, n, *(float(x) for x in mean),
-                     *(float(x) for x in std))
-                )
-            yield pd.DataFrame(
-                rows,
-                # first column must carry the CALLER's id_col name — the
-                # Spark output schema below uses it, and a non-default
-                # id_col would otherwise fail the mapInPandas column match
-                columns=[id_col]
-                + [f.name for f in COLOR_STATS_SCHEMA.fields][1:],
-            )
+    def row(payload, mask_payload) -> tuple:
+        img = _decode_image_shaped(bytes(payload))
+        if img.shape[-1] != 3:
+            raise ValueError("payload must decode to 3 channels")
+        m = _decode_image_shaped(bytes(mask_payload))
+        if m.shape[-1] != 1:
+            raise ValueError("mask must decode to 1 channel")
+        sel = m[..., 0] > 0
+        px = img[sel] / 255.0
+        n = int(sel.sum())
+        if n == 0:
+            return 0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0
+        if space == "hsv":
+            px = rgb_to_hsv_numpy(px)
+        elif space == "lab":
+            px = rgb_to_lab_numpy(px)
+        mean = np.nanmean(px, axis=0)
+        std = np.nanstd(px, axis=0)
+        return n, *(float(x) for x in mean), *(float(x) for x in std)
 
-    out_schema = T.StructType(
-        [T.StructField(id_col, media.schema[id_col].dataType, False)]
-        + list(COLOR_STATS_SCHEMA.fields)[1:]
+    return map_rows(
+        media, [id_col], [payload_col, mask_col],
+        COLOR_STATS_SCHEMA.fields[1:], row,
     )
-    return media.select(*cols).mapInPandas(run, out_schema)

@@ -5,9 +5,9 @@ PIL polygon fill (fextract/extractioncodes/FeatureExtractor.py:313,
 extraction_utils/xml_to_mask_minmax.py rasterizer) and the mask feeds
 area / centroid / bbox features. cv2/PIL are not in this container, so
 the fill is a self-contained numpy even-odd scanline rasterizer — the
-same algorithm class fillPoly implements — wrapped in an Arrow-batched
-``mapInPandas``. Geometry never becomes a Spark type: points arrive as
-``array<array<int>>`` columns, masks live and die inside the UDF, and
+same algorithm class fillPoly implements — run per row by the shared
+``_rowmap.map_rows``. Geometry never becomes a Spark type: points arrive
+as ``array<array<int>>`` columns, masks live and die inside the UDF, and
 only scalar features (area, bbox, centroid) come back — the SURVEY §1.1
 "payload stays Arrow-side" contract.
 """
@@ -15,13 +15,15 @@ only scalar features (area, bbox, centroid) come back — the SURVEY §1.1
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from combinedfeatureextraction_spark.multimodal._rowmap import map_rows
 
 
 def rasterize_polygon_numpy(points: np.ndarray) -> tuple[np.ndarray, int, int]:
@@ -78,6 +80,26 @@ def rasterize_polygon_numpy(points: np.ndarray) -> tuple[np.ndarray, int, int]:
     return mask, x_min, y_min
 
 
+def _polygon_rows(
+    df: DataFrame,
+    points_col: str,
+    id_cols: Sequence[str],
+    schema: T.StructType,
+    kernel: Callable[..., tuple],
+    *args,
+) -> DataFrame:
+    """id_cols + ``schema`` per polygon row: ``kernel(points, *args)``,
+    with a NULL points array read as an empty one. Every kernel returns
+    its zero-area tuple below 3 points, so degenerate rows need no guard
+    here."""
+
+    def row(pts) -> tuple:
+        pts = [] if pts is None else pts
+        return kernel(np.array([list(p) for p in pts]), *args)
+
+    return map_rows(df, id_cols, [points_col], schema.fields, row)
+
+
 MASK_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("mask_area", T.LongType(), True),
@@ -110,29 +132,11 @@ def polygon_mask_features(
     id_cols: Sequence[str],
 ) -> DataFrame:
     """id_cols + (mask_area, bbox_w, bbox_h, centroid_x, centroid_y) per
-    polygon row via mapInPandas — one rasterize per row inside the Arrow
-    batch, masks never leave the UDF. Scale: a pure map (no shuffle);
-    parallelism = input partitions."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(MASK_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                mask_features_numpy(np.array([list(p) for p in pts]))
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in MASK_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    polygon row — one rasterize per row inside the Arrow batch, masks
+    never leave the UDF."""
+    return _polygon_rows(
+        df, points_col, id_cols, MASK_FEATURES_SCHEMA, mask_features_numpy
+    )
 
 
 # -------------------------------------------------- 2-D components
@@ -261,32 +265,12 @@ def polygon_component_features(
     connectivity: int = 4,
 ) -> DataFrame:
     """id_cols + COMPONENT_FEATURES_SCHEMA per polygon row: rasterize →
-    2-D connected components → per-component measurement, all inside ONE
-    mapInPandas (masks and label arrays never leave the UDF). Pure map,
-    no shuffle; parallelism = input partitions — the 100 TB shape is
-    identical to polygon_mask_features."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(COMPONENT_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                component_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in COMPONENT_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    2-D connected components → per-component measurement, in one pass
+    per row (masks and label arrays never leave the UDF)."""
+    return _polygon_rows(
+        df, points_col, id_cols, COMPONENT_FEATURES_SCHEMA,
+        component_features_numpy, connectivity,
+    )
 
 
 # -------------------------------------------------- 2-D watershed
@@ -477,32 +461,12 @@ def polygon_watershed_features(
     connectivity: int = 4,
     rel_peak: float = 0.5,
 ) -> DataFrame:
-    """id_cols + WATERSHED_FEATURES_SCHEMA per polygon row — same pure-map
-    100 TB shape as polygon_component_features: masks, distance fields,
-    and label arrays never leave the Arrow batch, no shuffle, parallelism
-    = input partitions."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(WATERSHED_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                watershed_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity, rel_peak
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in WATERSHED_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    """id_cols + WATERSHED_FEATURES_SCHEMA per polygon row: masks,
+    distance fields and label arrays never leave the Arrow batch."""
+    return _polygon_rows(
+        df, points_col, id_cols, WATERSHED_FEATURES_SCHEMA,
+        watershed_features_numpy, connectivity, rel_peak,
+    )
 
 
 # ------------------------------------- 2-D reconstruction / hole fill
@@ -625,31 +589,12 @@ def polygon_hole_features(
     id_cols: Sequence[str],
     connectivity: int = 4,
 ) -> DataFrame:
-    """id_cols + HOLE_FEATURES_SCHEMA per polygon row — same pure-map
-    100 TB shape as the other rasterize operators (no shuffle, masks
-    in-UDF only)."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(HOLE_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                hole_features_numpy(
-                    np.array([list(p) for p in pts]), connectivity
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, 0)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in HOLE_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    """id_cols + HOLE_FEATURES_SCHEMA per polygon row (masks in-UDF
+    only)."""
+    return _polygon_rows(
+        df, points_col, id_cols, HOLE_FEATURES_SCHEMA,
+        hole_features_numpy, connectivity,
+    )
 
 
 # -------------------------------------------- EDT composite features
@@ -706,29 +651,12 @@ def polygon_edt_features(
     id_cols: Sequence[str],
     rel_thresh: float = 0.3,
 ) -> DataFrame:
-    """id_cols + EDT_FEATURES_SCHEMA per polygon row — pure map, masks
-    and distance fields in-UDF only, same 100 TB shape as the other
-    rasterize operators."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(EDT_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                edt_features_numpy(np.array([list(p) for p in pts]), rel_thresh)
-                if pts is not None and len(pts) >= 3
-                else (0, None, None, 0, None, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in EDT_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    """id_cols + EDT_FEATURES_SCHEMA per polygon row (masks and distance
+    fields in-UDF only)."""
+    return _polygon_rows(
+        df, points_col, id_cols, EDT_FEATURES_SCHEMA,
+        edt_features_numpy, rel_thresh,
+    )
 
 
 # -------------------------------------------------- boundary-ring morphology
@@ -837,28 +765,8 @@ def polygon_ring_features(
     radius: int = 20,
 ) -> DataFrame:
     """id_cols + RING_FEATURES_SCHEMA per polygon row (default radius 20
-    = the reference's disk(20), process_mc_features.py:83). Pure map via
-    mapInPandas — no shuffle, parallelism = input partitions, the same
-    100 TB shape as the other rasterize operators."""
-    id_fields = [df.schema[c] for c in id_cols]
-    schema = T.StructType(list(id_fields) + list(RING_FEATURES_SCHEMA.fields))
-    cols = list(id_cols) + [points_col]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                ring_features_numpy(
-                    np.array([list(p) for p in pts]), radius
-                )
-                if pts is not None and len(pts) >= 3
-                else (0, 0, 0, None)
-                for pts in pdf[points_col]
-            ]
-            f = pd.DataFrame(
-                feats,
-                columns=[x.name for x in RING_FEATURES_SCHEMA.fields],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf[list(id_cols)], f], axis=1)
-
-    return df.select(*cols).mapInPandas(run, schema)
+    = the reference's disk(20), process_mc_features.py:83)."""
+    return _polygon_rows(
+        df, points_col, id_cols, RING_FEATURES_SCHEMA,
+        ring_features_numpy, radius,
+    )

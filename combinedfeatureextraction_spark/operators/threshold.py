@@ -1,30 +1,20 @@
-"""Two-pass global thresholding + binarization.
+"""Two-pass global thresholding.
 
-Reference analogs (SURVEY.md A11/F11/X3):
+Reference analogs (SURVEY.md A11/X3):
  - Otsu global threshold (`threshold_otsu(pas)`,
    extractioncodes/process_mc_features.py:79): a histogram over the WHOLE
    input picks one scalar, then every row is binarized by it. In Spark:
    pass 1 aggregates the histogram / quantile, pass 2 broadcasts the
    scalar into a filter — the scalar rides the physical plan as a literal
    (subquery), so pass 2 is a plain pushed-down predicate.
- - fixed-threshold binarization (`x[x<=t]=0; x[x>0]=1`,
-   FeatureExtractor.py:340-341): a `when` cascade.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 import numpy as np
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def binarize(col: Column | str, threshold: float) -> Column:
-    """x <= t → 0, x > t → 1 (F11)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c > F.lit(threshold), F.lit(1)).otherwise(F.lit(0))
 
 
 def global_quantile_threshold(
@@ -40,20 +30,6 @@ def global_quantile_threshold(
         else F.percentile_approx(F.col(value), q, 10000)
     )
     return float(df.agg(expr.alias("t")).collect()[0]["t"])
-
-
-def apply_global_threshold(
-    df: DataFrame,
-    value: str,
-    q: float = 0.5,
-    out: str = "above",
-    exact: bool = True,
-) -> DataFrame:
-    """Two-pass A11: global quantile scalar → binarize every row by it."""
-    t = global_quantile_threshold(df, value, q, exact)
-    return df.withColumn(out, binarize(value, t)).withColumn(
-        "threshold", F.lit(t)
-    )
 
 
 def otsu_threshold(

@@ -651,3 +651,60 @@ def test_ring_weighted_thickness_two_components():
     areas = [a for a, _ in exp]
     want = sum(t * a for t, a in zip(thick, areas)) / sum(areas)
     assert abs(avg - want) < 1e-12
+
+
+# the per-family tuples a polygon with fewer than 3 points (or a NULL
+# points array) has always produced
+_DEGENERATE = {
+    "polygon_mask_features": (0, 0, 0, None, None),
+    "polygon_component_features": (0, 0, 0, None, None, None),
+    "polygon_watershed_features": (0, 0, 0, None, None, None),
+    "polygon_hole_features": (0, 0, 0, 0),
+    "polygon_edt_features": (0, None, None, 0, None, None),
+    "polygon_ring_features": (0, 0, 0, None),
+}
+
+
+@pytest.mark.parametrize(
+    "op, kernel, schema, args",
+    [
+        ("polygon_mask_features", "mask_features_numpy",
+         "MASK_FEATURES_SCHEMA", ()),
+        ("polygon_component_features", "component_features_numpy",
+         "COMPONENT_FEATURES_SCHEMA", (4,)),
+        ("polygon_watershed_features", "watershed_features_numpy",
+         "WATERSHED_FEATURES_SCHEMA", (4, 0.5)),
+        ("polygon_hole_features", "hole_features_numpy",
+         "HOLE_FEATURES_SCHEMA", (4,)),
+        ("polygon_edt_features", "edt_features_numpy",
+         "EDT_FEATURES_SCHEMA", (0.3,)),
+        ("polygon_ring_features", "ring_features_numpy",
+         "RING_FEATURES_SCHEMA", (20,)),
+    ],
+)
+def test_polygon_operators_null_and_degenerate_rows(
+    spark, op, kernel, schema, args
+):
+    """NULL, empty and 2-point rows give each family's zero-area tuple
+    through Spark; a rectangle gives the kernel's own tuple (operator
+    defaults = ``args``); the output schema is the key's input field plus
+    the family schema."""
+    from pyspark.sql import types as T
+
+    from combinedfeatureextraction_spark.multimodal import rasterize
+
+    rect = [[2, 1], [9, 1], [9, 6], [2, 6]]
+    in_schema = T.StructType([
+        T.StructField("pid", T.LongType(), False),
+        T.StructField("points", T.ArrayType(T.ArrayType(T.IntegerType()))),
+    ])
+    df = spark.createDataFrame(
+        [(1, None), (2, []), (3, [[0, 0], [5, 5]]), (4, rect)], in_schema
+    )
+    out = getattr(rasterize, op)(df, "points", ["pid"], *args)
+    fam = getattr(rasterize, schema)
+    assert out.schema == T.StructType([in_schema["pid"]] + fam.fields)
+    got = {r["pid"]: tuple(r)[1:] for r in out.collect()}
+    for pid in (1, 2, 3):
+        assert got[pid] == _DEGENERATE[op], pid
+    assert got[4] == getattr(rasterize, kernel)(np.array(rect), *args)
